@@ -633,19 +633,24 @@ object Bench {
       // key stays present and parse-valid, marked skipped). The driver
       // never sets the env, so its bench_detail.json is unchanged.
       val sidecarsOn = sys.env.getOrElse("SPARK_GRAFT_SIDECARS", "1") != "0"
-      def sidecar(f: => String): String =
-        if (sidecarsOn) f else """{"skipped":true}"""
+      val sidecars = Seq[(String, () => String)](
+        "serving_ms" -> (() => servingLatency(spark, sfDir)),
+        "serving_rps" -> (() => servingRps(spark, sfDir)),
+        "refresh_rps" -> (() => refreshRps(spark, sfDir)),
+        "hybrid_rps" -> (() => hybridRps(spark, sfDir)),
+        "nprobe_curve" -> (() => nprobeCurve(spark, sfDir)),
+        "bpe_apply" -> (() => bpeApply(spark)),
+        "ingest_fps_per_core" -> (() => ingestThroughput(spark)))
+      if (!sidecarsOn) System.err.println("[bench] SPARK_GRAFT_SIDECARS=0: " +
+        s"skipped sidecars ${sidecars.map(_._1).mkString(", ")}")
       val detail = line(6).dropRight(1) +
         s""","bands_n":${bands.size},"band_outliers":${bandOutliers.mkString("{", ",", "}")}""" +
         s""","gc_ms":$gcJson""" +
-        s""","serving_ms":${sidecar(servingLatency(spark, sfDir))}""" +
-        s""","serving_rps":${sidecar(servingRps(spark, sfDir))}""" +
-        s""","refresh_rps":${sidecar(refreshRps(spark, sfDir))}""" +
-        s""","hybrid_rps":${sidecar(hybridRps(spark, sfDir))}""" +
-        s""","nprobe_curve":${sidecar(nprobeCurve(spark, sfDir))}""" +
-        scaling +
-        s""","bpe_apply":${sidecar(bpeApply(spark))}""" +
-        s""","ingest_fps_per_core":${sidecar(ingestThroughput(spark))}}"""
+        sidecars.map { case (k, f) =>
+          val v = if (sidecarsOn) f() else """{"skipped":true}"""
+          s""","$k":$v"""
+        }.mkString +
+        scaling + "}"
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_detail.json"), detail.getBytes("UTF-8"))
     } catch { case _: Throwable => }

@@ -223,13 +223,13 @@ object ScalingBench {
     // loop) joins both decades; like t29b its per-round aggregation state
     // is vocabulary-collapsed, so wall should stay near-flat as the
     // token-disjoint copies grow the corpus but not the template vocab
-    val names10 = Seq("e2_minhash_pairs", "e4_jaccard_pairs", "e4c_jaccard_zipf",
-      "e4d_jaccard_zipf_exact", "e8_dedup_cluster", "p3_corpus_recipe",
-      "m4_cdc_apply", "u2_k_anonymity", "r3_bm25_topk",
-      "f1_fuzzy_join", "r2_retrieval_ivf", "t12_bpe_pairs", "t21_ngram_lm",
-      "x4_pack_token_ids", "t30_ngram_absdiscount", "t28_unigram_estep",
-      "t29_unigram_fit", "t29b_unigram_em2", "t29c_unigram_prune",
-      "t29d_unigram_quantfit", "t33_unigram_sampled_ids")
+    import Queries._
+    val names10 = Seq(e2MinhashPairs, e4JaccardPairs, e4cJaccardZipf,
+      e4dJaccardZipfExact, e8DedupCluster, p3CorpusRecipe, m4CdcApply,
+      u2KAnonymity, r3Bm25TopK, f1FuzzyJoin, r2RetrievalIvf, t12BpePairs,
+      t21NgramLm, x4PackTokenIds, t30NgramAbsDiscount, t28UnigramEstep,
+      t29UnigramFit, t29bUnigramEm2, t29cUnigramPrune, t29dUnigramQuantFit,
+      t33UnigramSampledIds).map(_.name)
     // c7b (QuantKmeans) is NOT in the ladder: the copies fixture carries
     // only the document-side tables, and the index family's decade story
     // is already owned by the ann/ivf_maintenance sections (build grows
@@ -241,12 +241,11 @@ object ScalingBench {
     // uncapped CONTRAST row (39× at 10×; a 100× run is hours of measuring
     // a plan SURVEY already calls unscalable), and e4's uncapped-df salted
     // index is superseded by e4c's prefix caps as the Zipf scale path.
-    val names100 = Set("e2_minhash_pairs", "e4c_jaccard_zipf",
-      "e8_dedup_cluster", "p3_corpus_recipe", "m4_cdc_apply", "u2_k_anonymity",
-      "r3_bm25_topk", "f1_fuzzy_join", "r2_retrieval_ivf", "t12_bpe_pairs",
-      "t21_ngram_lm", "x4_pack_token_ids", "t30_ngram_absdiscount",
-      "t28_unigram_estep", "t29b_unigram_em2", "t29d_unigram_quantfit",
-      "t33_unigram_sampled_ids")
+    val names100 = Set(e2MinhashPairs, e4cJaccardZipf, e8DedupCluster,
+      p3CorpusRecipe, m4CdcApply, u2KAnonymity, r3Bm25TopK, f1FuzzyJoin,
+      r2RetrievalIvf, t12BpePairs, t21NgramLm, x4PackTokenIds,
+      t30NgramAbsDiscount, t28UnigramEstep, t29bUnigramEm2,
+      t29dUnigramQuantFit, t33UnigramSampledIds).map(_.name)
     // build the ANN fixtures BEFORE the steal window opens (r13
     // self-review #2): the emb10000 build writes ~16 GB of parquet, and a
     // steal count spanning fixture IO can no longer flag a
@@ -355,8 +354,8 @@ object ScalingBench {
     val streamState = prior.flatMap(p => Option(p.get("stream_state")))
       .collect { case o: ObjectNode => o.deepCopy() }
       .getOrElse {
-        val rows = Seq("w1s_stream_window", "w2s_stream_session",
-          "w3s_stream_sliding", "e2s_stream_pairs")
+        val rows = Seq(w1sStreamWindow, w2sStreamSession, w3sStreamSliding,
+          e2sStreamPairs).map(_.name)
         val providers = Seq(
           "hdfs" -> ("org.apache.spark.sql.execution.streaming.state." +
             "HDFSBackedStateStoreProvider"),

@@ -42,11 +42,11 @@ object Verify {
     try if (only.isEmpty) {
       val exact = Queries.c8AnnExact(spark, sfDir).select("vec_id")
         .collect().map(_.getAs[Number](0).longValue).toSet
-      val entries = Seq("c8_ann_ivf", "c7_sq8_ann", "c7_pq_ann").flatMap { name =>
+      val entries = Seq(Queries.c8AnnIvf, Queries.c7Sq8Ann, Queries.c7PqAnn).flatMap { g =>
         try {
-          val ids = SparkEntry.queries(name)(spark, sfDir).select("vec_id")
+          val ids = g(spark, sfDir).select("vec_id")
             .collect().map(_.getAs[Number](0).longValue).toSet
-          Some(name -> ids.intersect(exact).size.toDouble / math.max(1, exact.size))
+          Some(g.name -> ids.intersect(exact).size.toDouble / math.max(1, exact.size))
         } catch { case _: Throwable => None }
       }
       // The gate embeddings are near-random, so the raw-recall entries above

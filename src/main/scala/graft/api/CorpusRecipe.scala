@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
   * stages through this API, so the DuckDB oracle checks the builder
   * end-to-end every round.
   *
-  * Laziness contract: every step except [[tokenBudget]] only composes the
-  * plan. `tokenBudget` delegates to [[Sampling.tokenBudget]], which runs
-  * its pass-1 job eagerly and rebuilds the frame behind an analysis
-  * barrier — gate and project BEFORE budgeting (the step order the
-  * builder's API makes natural).
+  * Laziness contract: every step except [[tokenBudget]] and
+  * [[scrubSharedPassages]] only composes the plan (the scrub's checkpoints
+  * run the upstream shuffle stages, see there). `tokenBudget` delegates
+  * to [[Sampling.tokenBudget]], which runs its pass-1 job eagerly and
+  * rebuilds the frame behind an analysis barrier — gate and project
+  * BEFORE budgeting (the step order the builder's API makes natural).
   */
 final class CorpusRecipe private (
     val frame: DataFrame, idCol: String, textCol: String) {
@@ -229,11 +230,12 @@ final class CorpusRecipe private (
     // (p5: boilerplate-drop → normalize → scrub) each reference re-ran
     // the whole upstream chain (r19; the pinned set is corpus-sized, the
     // same posture as passageScrub's own internal checkpoints).
-    // LAZY (ADVICE r19): an eager checkpoint here would execute the whole
-    // upstream pipeline at recipe-COMPOSITION time, breaking the class
-    // doc's laziness contract — eager=false still truncates lineage and
-    // dedupes the three references at first action (the Spread.barrier
-    // precedent)
+    // eager=false (ADVICE r19) defers only the RESULT stage: under AQE the
+    // lazy checkpoint still runs every upstream shuffle stage when the
+    // recipe is composed — on sf0.001, pinning p5's boilerplate-drop →
+    // normalize frame runs 5 jobs at composition, and the whole scrub step
+    // 8 (passageScrub's own pins add 3). It still truncates lineage and
+    // dedupes the three references.
     val pinned = frame.localCheckpoint(eager = false)
     val cleaned = TextDedup.passageScrub(pinned, textCol, idCol, k)
       .select(col(idCol), col("clean_text"))

@@ -162,10 +162,12 @@ object SequencePack {
     // join side — because Catalyst re-executes shared subtrees per
     // branch). The count table is (id, long) — document-grain, the
     // smallest frame in the operator — and the lazy localCheckpoint pins
-    // it at packManifest's (already eager, see class doc) pass-1 job, so
+    // it for packManifest's (already eager, see class doc) pass-1 job, so
     // the sep rows and the manifest BOTH read the pinned copy: ids now
     // executes exactly twice (count build + join side), the documented
-    // floor for this contract.
+    // floor for this contract. Under AQE the lazy checkpoint defers only
+    // its result stage: composing it runs the count's shuffle stage at
+    // once (1 job on sf0.001; packTokenIds runs 4 jobs at composition).
     val cnt = base.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
     val (withSep, counts) = sepId match {
       case Some(sid) =>

@@ -439,12 +439,13 @@ object TextDedup {
     // count AND the coverage join — localCheckpoint each shared subtree
     // once, or Catalyst re-runs the tokenize/explode/window pipeline per
     // branch (the measured recompute trap saltedIndexMatches documents).
-    // tok's checkpoint is LAZY (r20, VERDICT r19 #5): sh's eager
-    // checkpoint job computes through tok and materializes its persist on
-    // the way, so ONE pre-job pins both frames instead of two serial
-    // checkpoint boundaries; the kept anti-join later reads the pinned
-    // tok. re-spread after the checkpoint: an ExistingRDD scan reports
-    // UnknownPartitioning, so the shingle window would otherwise insert
+    // tok's checkpoint is LAZY (r20, VERDICT r19 #5), which under AQE
+    // defers only its result stage: composing it still runs tok's
+    // repartition shuffle (1 job on sf0.001), and sh's eager checkpoint
+    // then computes through tok and materializes its persist on the way —
+    // 3 jobs for the whole call at composition time; the kept anti-join
+    // later reads the pinned tok. re-spread after the checkpoint: an
+    // ExistingRDD scan reports UnknownPartitioning, so the shingle window would otherwise insert
     // an ENSURE_REQUIREMENTS exchange that AQE coalesces to one
     // partition, serializing the lead()-window pass (r19)
     val tok = Spread.byCols(

@@ -7,7 +7,9 @@ Usage: after `sbt "runMain graft.Verify <sfDir> <outDir>"`, run
 For each query: loads the Spark parquet result, runs the oracle SQL in
 DuckDB over views named after the testdata tables, sorts columns by name,
 sorts rows, compares cell-by-cell with exact equality. Queries without
-oracle SQL get a rows>0 check (the driver's weaker path).
+oracle SQL get a rows>0 check (the driver's weaker path). An oracle key with
+no result dir (the row failed in Verify) is reported as FAIL MISSING and
+counted; any failure makes the exit status non-zero.
 """
 import glob
 import json
@@ -69,6 +71,12 @@ def main(sf_dir, out_dir):
             results[name] = f"VALUE-MISMATCH e.g. {diffs}"
         else:
             results[name] = f"OK ({len(a)} rows)"
+
+    # Verify writes no result dir for a row that threw; without this such a
+    # row would silently drop out of the n/N count.
+    for name in oracles:
+        if name not in results:
+            results[name] = "MISSING (no result dir)"
 
     n_ok = sum(1 for v in results.values() if v.startswith(("OK", "rows-only")))
     for k in sorted(results):
